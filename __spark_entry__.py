@@ -63,6 +63,8 @@ TABLES = [
 
 _registered_sf: list[str] = []
 
+_NANOCACHE = "/tmp/sdls_nanocache/v2"
+
 
 def _data_path(sf_dir: str, table: str) -> str:
     """Path Spark should read for a testdata table.
@@ -81,13 +83,17 @@ def _data_path(sf_dir: str, table: str) -> str:
        ``spark.sql.files.maxPartitionBytes`` sized accordingly, see
        bench.py). At production scale inputs arrive as many files /
        row groups and none of this is needed.
+
+    The copy's name carries the source's size and mtime, so a source
+    regenerated in place gets a fresh copy instead of the stale one.
     """
     import pyarrow.parquet as pq
 
     src = f"{sf_dir}/{table}.parquet"
+    st = os.stat(src)
     safe = sf_dir.strip("/").replace("/", "_")
-    cache_dir = f"/tmp/sdls_nanocache/v2/{safe}"
-    dst = f"{cache_dir}/{table}.parquet"
+    cache_dir = f"{_NANOCACHE}/{safe}"
+    dst = f"{cache_dir}/{table}.{st.st_size}-{st.st_mtime_ns}.parquet"
     if not os.path.exists(dst):
         import pyarrow as pa
 

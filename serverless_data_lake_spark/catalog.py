@@ -22,18 +22,22 @@ the *plan shape* matches what an Iceberg MERGE would do at 100 TB:
   tables (``{domain}_{layer}.{table}``), so ``spark.sql`` resolves
   rewritten three-part names and Catalyst gets stats/pushdown.
 
-Durability model: single writer per table. Writes are staged and then
-committed with a roll-forward marker: new files move in *before* old
-files are deleted, and the list of files to delete is journalled in a
-``_sdls_pending.json`` marker first. A crash mid-commit therefore
-leaves extra (duplicate) rows, never lost rows, and the next write on
-the table rolls the pending deletes forward to the consistent state.
-Full-table replace swaps whole directories by rename. This is weaker
-than the reference's Iceberg snapshot isolation — a concurrent reader
-can observe duplicates during the (small) commit window — and that
-trade is deliberate for plain parquet; swap the backend for
-Iceberg/Delta in environments that ship the jar, the interface is
-unchanged.
+Durability model: single writer per table. Every incremental write
+(``merge``/``delete_insert``, ``append``, ``compact``) writes its new
+files into a sibling ``__stage_`` directory and ends in the one
+journalled commit, ``TableStore._commit``: the files it replaces are
+journalled in a ``_sdls_pending.json`` marker first, staged files move
+in *before* the replaced files are deleted, and then the table meta
+``_sdls_meta.json`` (schema, keys, zone maps and, under
+``retain_history``, the snapshot list) is written once. A crash
+mid-commit therefore leaves extra (duplicate) rows, never lost rows,
+and the next write on the table rolls the pending deletes forward to
+the consistent state. Full-table replace stages data + meta and swaps
+whole directories by rename. This is weaker than the reference's
+Iceberg snapshot isolation — a concurrent reader can observe
+duplicates during the (small) commit window — and that trade is
+deliberate for plain parquet; swap the backend for Iceberg/Delta in
+environments that ship the jar, the interface is unchanged.
 """
 
 from __future__ import annotations
@@ -52,7 +56,6 @@ from serverless_data_lake_spark.config import LakeConfig
 
 _META_FILE = "_sdls_meta.json"
 _PENDING_FILE = "_sdls_pending.json"
-_SNAPSHOTS_FILE = "_sdls_snapshots.json"
 _ARCHIVE_DIR = "_archive"
 
 
@@ -86,10 +89,11 @@ class TableStore:
     """Catalog + storage manager for one lake.
 
     ``retain_history=True`` turns on time travel: every committed
-    write records a snapshot (version, data files, schema) in a
-    per-table manifest, and files replaced by later writes move to an
-    ``_archive/`` subdirectory instead of being deleted (leading
-    underscore → invisible to Spark's directory scans).
+    write appends a snapshot (version, data files, schema) to the
+    table meta in the same write that commits it, and files replaced
+    by later writes move to an ``_archive/`` subdirectory instead of
+    being deleted (leading underscore → invisible to Spark's
+    directory scans).
     :meth:`read_version` reconstructs any recorded snapshot;
     :meth:`vacuum` prunes history. This is the Iceberg/Delta snapshot
     idea over plain parquet — storage grows with churn until
@@ -104,7 +108,6 @@ class TableStore:
         self.spark = spark
         self.config = config
         self.retain_history = retain_history
-        self._fs_cache: dict[str, object] = {}
 
     # ------------------------------------------------------------------
     # Hadoop FS helpers (work for file:// and s3a:// alike)
@@ -217,16 +220,10 @@ class TableStore:
     def _write_pending(
         self, location: str, staging: str, delete_files: list[str]
     ) -> None:
-        fs = self._fs(location)
-        out = fs.create(self._hpath(f"{location}/{_PENDING_FILE}"), True)
-        out.write(
-            bytearray(
-                json.dumps(
-                    {"staging": staging, "delete": delete_files}
-                ).encode()
-            )
+        self._write_json(
+            f"{location}/{_PENDING_FILE}",
+            {"staging": staging, "delete": delete_files},
         )
-        out.close()
 
     def _apply_pending(self, location: str) -> None:
         """Roll forward an in-flight (or crashed) commit: finish the
@@ -235,19 +232,9 @@ class TableStore:
         ordered so a crash at any point never loses rows (the staged
         files are always moved in before their originals go)."""
         path = f"{location}/{_PENDING_FILE}"
-        if not self._exists(path):
+        pending = self._read_json(path)
+        if pending is None:
             return
-        fs = self._fs(path)
-        stream = fs.open(self._hpath(path))
-        try:
-            data = bytes(
-                self.spark._jvm.org.apache.commons.io.IOUtils.toByteArray(  # noqa: SLF001
-                    stream
-                )
-            )
-        finally:
-            stream.close()
-        pending = json.loads(data.decode())
         staging = pending.get("staging")
         if staging and self._exists(staging):
             self._move_files_into(staging, location)
@@ -260,11 +247,64 @@ class TableStore:
                     self._delete(f)
         self._delete(path)
 
+    def _commit(
+        self,
+        old: TableInfo,
+        meta: dict,
+        new: TableInfo,
+        staging: str,
+        delete_files: list[str],
+        batch_parts: list | None = None,
+    ) -> TableInfo:
+        """The commit every incremental write ends with: the data
+        files staged under ``staging`` replace ``delete_files``.
+        ``old``/``meta`` are the table as the write read it, ``new``
+        the table after it.
+
+        1. Zone maps: entries of deleted files drop out and the staged
+           files' ranges are collected. They are kept on the lead
+           primary key only; when the write changes it, no old entry
+           carries over (a range of another column would prune wrong
+           files; a file without stats is simply never pruned).
+        2. Journal + roll forward: staged files move in before the
+           deleted ones go.
+        3. One meta write, which under ``retain_history`` also
+           appends the new snapshot.
+        4. Catalog sync: re-register on a schema change, else refresh
+           (one ADD PARTITION per touched partition tuple when
+           ``batch_parts`` knows them)."""
+        lead = new.primary_keys[:1]
+        stats = {}
+        if old.primary_keys[:1] == lead:
+            gone = {f.rsplit("/", 1)[-1] for f in delete_files}
+            stats = {
+                b: v
+                for b, v in (meta.get("file_stats") or {}).items()
+                if b not in gone
+            }
+        if lead:
+            stats |= self._collect_file_stats(
+                self._list_data_files(staging), lead[0], new.data_schema
+            )
+        self._write_pending(new.location, staging, delete_files)
+        self._apply_pending(new.location)
+        self._write_meta(
+            new, stats, self._snapshots_after(meta, new, new.location)
+        )
+        if new.schema != old.schema:
+            self._register(new)
+        else:
+            self._refresh(new, batch_parts)
+        return new
+
     # ------------------------------------------------------------------
     # Metadata
     # ------------------------------------------------------------------
     def _write_meta(
-        self, info: TableInfo, file_stats: dict | None = None
+        self,
+        info: TableInfo,
+        file_stats: dict | None = None,
+        snapshots: list[dict] | None = None,
     ) -> None:
         meta = {
             "schema": info.schema.json(),
@@ -276,13 +316,38 @@ class TableStore:
         }
         if file_stats is not None:
             meta["file_stats"] = file_stats
-        fs = self._fs(info.location)
-        out = fs.create(self._hpath(f"{info.location}/{_META_FILE}"), True)
-        out.write(bytearray(json.dumps(meta).encode()))
-        out.close()
+        if snapshots is not None:
+            meta["snapshots"] = snapshots
+        self._write_json(f"{info.location}/{_META_FILE}", meta)
 
     def _read_meta(self, location: str) -> dict | None:
         return self._read_json(f"{location}/{_META_FILE}")
+
+    def _load(
+        self, database: str, table: str
+    ) -> tuple[TableInfo | None, dict]:
+        """The table's info and raw meta from one read of its meta
+        file; ``(None, {})`` when the table does not exist."""
+        location = self.config.table_path(database, table)
+        meta = self._read_meta(location)
+        if meta is None:
+            return None, {}
+        return self._table_info(database, table, location, meta), meta
+
+    @staticmethod
+    def _table_info(
+        database: str, table: str, location: str, meta: dict
+    ) -> TableInfo:
+        return TableInfo(
+            database=database,
+            name=table,
+            location=location,
+            schema=StructType.fromJson(json.loads(meta["schema"])),
+            primary_keys=meta.get("primary_keys", []),
+            partition_by=meta.get("partition_by", []),
+            bucket_by=meta.get("bucket_by", []),
+            n_buckets=meta.get("n_buckets", 0),
+        )
 
     # ------------------------------------------------------------------
     # Zone maps: per-data-file [min, max] of the lead primary key,
@@ -351,51 +416,84 @@ class TableStore:
     # ------------------------------------------------------------------
     # Snapshots / time travel (retain_history=True)
     # ------------------------------------------------------------------
-    def _record_snapshot(self, info: TableInfo) -> None:
+    def _snapshots_after(
+        self, meta: dict, info: TableInfo, root: str
+    ) -> list[dict] | None:
+        """Under ``retain_history``: the snapshot list of ``meta`` plus
+        one for the data files now under ``root``, to be written with
+        the commit's meta. ``None`` otherwise, so a table without
+        history carries no snapshot key."""
         if not self.retain_history:
-            return
-        path = f"{info.location}/{_SNAPSHOTS_FILE}"
-        snaps = self._read_json(path) or []
-        files = sorted(
-            rel for _, rel, _ in self._walk_data_files(info.location)
-        )
-        snaps.append(
+            return None
+        snaps = meta.get("snapshots") or []
+        return snaps + [
             {
                 "version": (snaps[-1]["version"] + 1) if snaps else 1,
                 "timestamp": time.strftime(
                     "%Y-%m-%dT%H:%M:%SZ", time.gmtime()
                 ),
-                "files": files,
+                "files": sorted(
+                    rel for _, rel, _ in self._walk_data_files(root)
+                ),
                 "schema": info.schema.json(),
                 "partition_by": info.partition_by,
             }
-        )
-        self._write_json(path, snaps)
+        ]
+
+    def _require(self, database: str, table: str) -> tuple[TableInfo, dict]:
+        info, meta = self._load(database, table)
+        if info is None:
+            raise KeyError(f"no such table {database}.{table}")
+        return info, meta
+
+    def _open_for_write(
+        self, database: str, table: str, verb: str
+    ) -> tuple[TableInfo | None, dict]:
+        """Start an incremental write: roll a crashed commit forward,
+        then read the table meta once. Bucketed tables refuse: bucket
+        membership is baked into file names at write time, so file
+        surgery would break the bucket→file contract."""
+        self._apply_pending(self.config.table_path(database, table))
+        existing, meta = self._load(database, table)
+        if existing is not None and existing.bucket_by:
+            raise ValueError(
+                f"{database}.{table} is a bucketed materialization "
+                f"(overwrite-only); re-run its producing job instead "
+                f"of {verb}"
+            )
+        return existing, meta
+
+    def _stage(
+        self, df: DataFrame, location: str, partition_by: list[str]
+    ) -> str:
+        """Write ``df`` into a fresh sibling staging dir of the table
+        (hive layout when ``partition_by``); returns its path."""
+        staging = f"{location}__stage_{uuid.uuid4().hex[:8]}"
+        writer = df.write.mode("overwrite")
+        if partition_by:
+            writer = writer.partitionBy(*partition_by)
+        writer.parquet(staging)
+        return staging
 
     def snapshots(self, database: str, table: str) -> list[dict]:
         """Recorded snapshots, oldest first: version, timestamp,
         file count."""
-        info = self.info(database, table)
-        if info is None:
-            raise KeyError(f"no such table {database}.{table}")
-        snaps = self._read_json(f"{info.location}/{_SNAPSHOTS_FILE}") or []
+        _, meta = self._require(database, table)
         return [
             {
                 "version": s["version"],
                 "timestamp": s["timestamp"],
                 "n_files": len(s["files"]),
             }
-            for s in snaps
+            for s in meta.get("snapshots") or []
         ]
 
     def read_version(self, database: str, table: str, version: int) -> DataFrame:
         """The table exactly as of a recorded snapshot (time travel).
         Files live either in the table dir (still current) or in
         ``_archive/`` (replaced since); a vacuumed snapshot raises."""
-        info = self.info(database, table)
-        if info is None:
-            raise KeyError(f"no such table {database}.{table}")
-        snaps = self._read_json(f"{info.location}/{_SNAPSHOTS_FILE}") or []
+        info, meta = self._require(database, table)
+        snaps = meta.get("snapshots") or []
         snap = next((s for s in snaps if s["version"] == version), None)
         if snap is None:
             raise KeyError(
@@ -443,11 +541,8 @@ class TableStore:
         """Drop all but the last ``keep_last`` snapshots and delete
         archived files no kept snapshot references. Returns the number
         of files deleted."""
-        info = self.info(database, table)
-        if info is None:
-            raise KeyError(f"no such table {database}.{table}")
-        path = f"{info.location}/{_SNAPSHOTS_FILE}"
-        snaps = self._read_json(path) or []
+        info, meta = self._require(database, table)
+        snaps = meta.get("snapshots") or []
         kept = snaps[-keep_last:] if keep_last > 0 else []
         referenced: set[str] = set()
         for s in kept:
@@ -462,7 +557,10 @@ class TableStore:
                 if rel not in referenced:
                     self._delete(f)
                     removed += 1
-        self._write_json(path, kept)
+        if kept != snaps:
+            self._write_json(
+                f"{info.location}/{_META_FILE}", meta | {"snapshots": kept}
+            )
         return removed
 
     # ------------------------------------------------------------------
@@ -572,16 +670,7 @@ class TableStore:
                 if meta is None:
                     continue
                 self._apply_pending(location)
-                info = TableInfo(
-                    database=database,
-                    name=t_status.getPath().getName(),
-                    location=location,
-                    schema=StructType.fromJson(json.loads(meta["schema"])),
-                    primary_keys=meta.get("primary_keys", []),
-                    partition_by=meta.get("partition_by", []),
-                    bucket_by=meta.get("bucket_by", []),
-                    n_buckets=meta.get("n_buckets", 0),
-                )
+                info = self._table_info(database, name, location, meta)
                 self._register(info)
                 infos.append(info)
         return infos
@@ -616,20 +705,7 @@ class TableStore:
         return None
 
     def info(self, database: str, table: str) -> TableInfo | None:
-        location = self.config.table_path(database, table)
-        meta = self._read_meta(location)
-        if meta is None:
-            return None
-        return TableInfo(
-            database=database,
-            name=table,
-            location=location,
-            schema=StructType.fromJson(json.loads(meta["schema"])),
-            primary_keys=meta.get("primary_keys", []),
-            partition_by=meta.get("partition_by", []),
-            bucket_by=meta.get("bucket_by", []),
-            n_buckets=meta.get("n_buckets", 0),
-        )
+        return self._load(database, table)[0]
 
     # ------------------------------------------------------------------
     # Write modes
@@ -659,11 +735,7 @@ class TableStore:
         if missing:
             raise ValueError(f"partition columns not in data: {missing}")
         location = self.config.table_path(database, table)
-        staging = f"{location}__stage_{uuid.uuid4().hex[:8]}"
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(staging)
+        staging = self._stage(df, location, partition_by)
         schema = StructType(
             [f for f in df.schema.fields if f.name not in partition_by]
             + [f for f in df.schema.fields if f.name in partition_by]
@@ -686,33 +758,34 @@ class TableStore:
             if primary_keys
             else {}
         )
-        self._write_meta(
-            dataclasses.replace(info, location=staging), file_stats=stats
-        )
-        self._swap_in(info, staging)
-        return info
+        return self._swap_in(info, staging, stats)
 
-    def _swap_in(self, info: TableInfo, staging: str) -> TableInfo:
-        """Directory-swap commit for full-replace writes: the staged
-        snapshot (data + metadata, already written under ``staging``)
-        becomes the table; the previous snapshot is deleted (or
-        archived under ``retain_history``) only after the new one is
-        in place."""
+    def _swap_in(
+        self, info: TableInfo, staging: str, file_stats: dict | None = None
+    ) -> TableInfo:
+        """Directory-swap commit for full-replace writes: the meta is
+        written into ``staging`` next to the staged data (carrying the
+        previous snapshot list plus the new snapshot under
+        ``retain_history``), then the staged table is swapped in; the
+        previous one is deleted (or archived under ``retain_history``)
+        only after the new one is in place."""
         location = info.location
+        snapshots = None
+        if self.retain_history:
+            snapshots = self._snapshots_after(
+                self._read_meta(location) or {}, info, staging
+            )
+        self._write_meta(
+            dataclasses.replace(info, location=staging), file_stats, snapshots
+        )
         old = f"{location}__old_{uuid.uuid4().hex[:8]}"
         if self._exists(location):
             self._rename_dir(location, old)
         self._rename_dir(staging, location)
         if self._exists(old):
             if self.retain_history:
-                # Carry the previous snapshots manifest and archive
-                # every superseded data file (current + already
+                # Archive every superseded data file (current + already
                 # archived) so earlier versions stay readable.
-                old_snaps = self._read_json(f"{old}/{_SNAPSHOTS_FILE}")
-                if old_snaps:
-                    self._write_json(
-                        f"{location}/{_SNAPSHOTS_FILE}", old_snaps
-                    )
                 for f, rel, _ in self._walk_data_files(old):
                     self._archive_file(location, f, rel)
                 old_arch = f"{old}/{_ARCHIVE_DIR}"
@@ -721,7 +794,6 @@ class TableStore:
                         self._archive_file(location, f, rel)
             self._delete(old)
         self._register(info)
-        self._record_snapshot(info)
         return info
 
     def create_bucketed(
@@ -783,9 +855,7 @@ class TableStore:
             bucket_by,
             int(n_buckets),
         )
-        self._write_meta(dataclasses.replace(info, location=staging))
-        self._swap_in(info, staging)
-        return info
+        return self._swap_in(info, staging)
 
     def append(
         self,
@@ -799,48 +869,26 @@ class TableStore:
         V6: new columns widen the table schema; old files read as
         null for them). On a partitioned table the batch's files land
         only in the partitions it carries (``partition_by`` applies
-        on first create; thereafter the table's layout wins)."""
-        self._apply_pending(self.config.table_path(database, table))
-        existing = self.info(database, table)
+        on first create; thereafter the table's layout wins). The
+        batch is staged and committed like a merge that replaces no
+        file."""
+        existing, meta = self._open_for_write(database, table, "appending")
         if existing is None:
             return self.create_or_replace(
                 database, table, df, primary_keys, partition_by
             )
-        if existing.bucket_by:
-            raise ValueError(
-                f"{database}.{table} is a bucketed materialization "
-                f"(overwrite-only); re-run its producing job instead "
-                f"of appending"
-            )
         merged_schema = self._merge_schemas(existing.schema, df.schema)
-        df = self._conform(df, merged_schema)
-        before = set(self._list_data_files(existing.location))
-        writer = df.write.mode("append")
-        if existing.partition_by:
-            writer = writer.partitionBy(*existing.partition_by)
-        writer.parquet(existing.location)
+        staging = self._stage(
+            self._conform(df, merged_schema),
+            existing.location,
+            existing.partition_by,
+        )
         info = TableInfo(
             database, table, existing.location, merged_schema,
             primary_keys if primary_keys is not None else existing.primary_keys,
             existing.partition_by,
         )
-        stats = self._load_file_stats(existing.location)
-        if info.primary_keys:
-            new_files = [
-                f
-                for f in self._list_data_files(existing.location)
-                if f not in before
-            ]
-            stats = stats | self._collect_file_stats(
-                new_files, info.primary_keys[0], info.data_schema
-            )
-        self._write_meta(info, file_stats=stats)
-        self._record_snapshot(info)
-        if merged_schema != existing.schema:
-            self._register(info)
-        else:
-            self._refresh(info)
-        return info
+        return self._commit(existing, meta, info, staging, [])
 
     def merge(
         self,
@@ -860,9 +908,9 @@ class TableStore:
            *names*, never rows);
         2. rewrite = (rows of those files anti-joined against source
            keys) ∪ source;
-        3. stage; journal the matched files in the pending marker;
-           move the staged files in; delete the matched files + the
-           marker (the commit step).
+        3. stage the rewrite, then :meth:`_commit`: journal the
+           matched files in the pending marker, move the staged files
+           in, delete the matched files + the marker.
 
         A crash mid-commit leaves matched rows duplicated (old + new
         file both present), never lost; the next write on the table
@@ -880,9 +928,10 @@ class TableStore:
         equal partition tuples and no match can hide in another
         partition. Otherwise the scan falls back to per-file zone
         maps on the lead key (maintained for partitioned and flat
-        tables alike), so it still opens only files whose key range
-        can overlap the batch. ``partition_by`` applies when this
-        merge creates the table.
+        tables alike), so when the merge keys lead with that same
+        column it still opens only files whose key range can overlap
+        the batch. ``partition_by`` applies when this merge creates
+        the table.
         """
         if isinstance(keys, str):
             # dbt-style configs allow a scalar unique_key; a bare
@@ -891,17 +940,10 @@ class TableStore:
             keys = [keys]
         if not keys:
             raise ValueError("merge requires at least one key column")
-        self._apply_pending(self.config.table_path(database, table))
-        existing = self.info(database, table)
+        existing, meta = self._open_for_write(database, table, "merging")
         if existing is None:
             return self.create_or_replace(
                 database, table, source, keys, partition_by
-            )
-        if existing.bucket_by:
-            raise ValueError(
-                f"{database}.{table} is a bucketed materialization "
-                f"(overwrite-only); re-run its producing job instead "
-                f"of merging"
             )
 
         merged_schema = self._merge_schemas(existing.schema, source.schema)
@@ -920,154 +962,86 @@ class TableStore:
         src_keys = source.select(*keys).dropDuplicates(keys).persist()
 
         batch_parts = None
-        if pby:
-            stats = self._load_file_stats(location)
-            if all(c in source_cols for c in pby):
-                # The batch's partition tuples — bounded by the number
-                # of partitions a batch touches, collected like
-                # Iceberg's partition summaries. Used for the
-                # surgical ADD PARTITION catalog sync, and for
-                # directory pruning when that is key-safe.
-                pvals = (
-                    source.select(*pby).dropDuplicates(pby).limit(10001).collect()
-                )
-                if len(pvals) <= 10000:
-                    batch_parts = pvals
-            # Directory pruning is only sound when the partition
-            # tuple is part of the key: then equal keys imply equal
+        if pby and all(c in source_cols for c in pby):
+            # The batch's partition tuples — bounded by the number of
+            # partitions a batch touches, collected like Iceberg's
+            # partition summaries. Used for the surgical ADD PARTITION
+            # catalog sync, and for directory pruning when that is
+            # key-safe.
+            pvals = (
+                source.select(*pby).dropDuplicates(pby).limit(10001).collect()
+            )
+            if len(pvals) <= 10000:
+                batch_parts = pvals
+
+        # basePath keeps the partition-column values that live in the
+        # directory names of a partitioned table's files.
+        reader = self.spark.read.schema(merged_schema).option(
+            "basePath", location
+        )
+        if pby and set(pby) <= set(keys) and batch_parts is not None:
+            # Directory pruning is only sound when the partition tuple
+            # is part of the key: then equal keys imply equal
             # partition values and a matched row cannot live outside
             # the batch's partitions. Pruning on a non-key partition
             # column would miss a stored row whose partition value
             # differs from the incoming one (late correction) and
             # silently duplicate its key.
-            prune_safe = set(pby) <= set(keys)
-            if prune_safe and batch_parts is not None:
-                scan = (
-                    self.spark.read.schema(merged_schema)
-                    .option("basePath", location)
-                    .parquet(location)
-                )
-                cond = None
-                for r in batch_parts:
-                    t = None
-                    for c in pby:
-                        e = (
-                            F.col(c).isNull()
-                            if r[c] is None
-                            else (F.col(c) == F.lit(r[c]))
-                        )
-                        t = e if t is None else (t & e)
-                    cond = t if cond is None else (cond | t)
-                if cond is not None:
-                    scan = scan.where(cond)
-            else:
-                # Table-wide key scan, bounded by lead-key zone maps:
-                # only files whose [min, max] range can overlap the
-                # batch's key range are opened (stat-less legacy
-                # files always qualify). Column-pruned to the key
-                # columns either way.
-                all_files = self._list_data_files(location)
-                candidates = all_files
-                if stats:
-                    bounds = src_keys.agg(
-                        F.min(keys[0]).alias("mn"), F.max(keys[0]).alias("mx")
-                    ).first()
-                    candidates = self._prune_by_stats(
-                        all_files, stats, bounds["mn"], bounds["mx"]
+            scan = reader.parquet(location)
+            cond = None
+            for r in batch_parts:
+                t = None
+                for c in pby:
+                    e = (
+                        F.col(c).isNull()
+                        if r[c] is None
+                        else (F.col(c) == F.lit(r[c]))
                     )
-                if not candidates:
-                    scan = None
-                else:
-                    scan = (
-                        self.spark.read.schema(merged_schema)
-                        .option("basePath", location)
-                        .parquet(*candidates)
-                    )
-            if scan is None:
-                affected_files = []
-            else:
-                affected = (
-                    scan.select(
-                        *keys, F.col("_metadata.file_path").alias("__file")
-                    )
-                    .join(src_keys, on=keys, how="left_semi")
-                    .select("__file")
-                    .distinct()
-                    .collect()
-                )
-                affected_files = [r["__file"] for r in affected]
+                    t = e if t is None else (t & e)
+                cond = t if cond is None else (cond | t)
+            if cond is not None:
+                scan = scan.where(cond)
         else:
-            # Zone-map pruning: only files whose lead-key range can
-            # overlap the batch participate in the affected-file scan.
-            stats = self._load_file_stats(location)
-            all_files = self._list_data_files(location)
-            candidates = all_files
-            if stats:
+            # Table-wide key scan, bounded by lead-key zone maps: only
+            # files whose [min, max] range can overlap the batch's key
+            # range are opened (stat-less files always qualify). The
+            # stats are ranges of the table's lead key, so they bound
+            # this scan only when it matches on that same column.
+            candidates = self._list_data_files(location)
+            stats = meta.get("file_stats")
+            if stats and existing.primary_keys[:1] == keys[:1]:
                 bounds = src_keys.agg(
                     F.min(keys[0]).alias("mn"), F.max(keys[0]).alias("mx")
                 ).first()
                 candidates = self._prune_by_stats(
-                    all_files, stats, bounds["mn"], bounds["mx"]
+                    candidates, stats, bounds["mn"], bounds["mx"]
                 )
-
-            if candidates:
-                affected = (
-                    self.spark.read.schema(merged_schema)
-                    .parquet(*candidates)
-                    .select(
-                        *keys, F.col("_metadata.file_path").alias("__file")
-                    )
-                    .join(src_keys, on=keys, how="left_semi")
-                    .select("__file")
-                    .distinct()
-                    .collect()
+            scan = reader.parquet(*candidates) if candidates else None
+        affected_files = []
+        if scan is not None:
+            affected_files = [
+                r["__file"]
+                for r in scan.select(
+                    *keys, F.col("_metadata.file_path").alias("__file")
                 )
-                affected_files = [r["__file"] for r in affected]
-            else:
-                affected_files = []
+                .join(src_keys, on=keys, how="left_semi")
+                .select("__file")
+                .distinct()
+                .collect()
+            ]
 
-        staging = f"{location}__stage_{uuid.uuid4().hex[:8]}"
+        out = source
         if affected_files:
-            reader = self.spark.read.schema(merged_schema)
-            if pby:
-                # basePath keeps the partition-column values that live
-                # in the directory names of the affected files.
-                reader = reader.option("basePath", location)
             survivors = reader.parquet(*affected_files).join(
                 src_keys, on=keys, how="left_anti"
             )
             out = survivors.unionByName(source)
-        else:
-            out = source
-        writer = out.write.mode("overwrite")
-        if pby:
-            writer = writer.partitionBy(*pby)
-        writer.parquet(staging)
-
-        new_info = TableInfo(database, table, location, merged_schema, keys, pby)
-        new_stats = self._collect_file_stats(
-            self._list_data_files(staging), keys[0], new_info.data_schema
-        )
-        deleted = {f.rsplit("/", 1)[-1] for f in affected_files}
-        stats = {
-            b: v for b, v in stats.items() if b not in deleted
-        } | new_stats
+        staging = self._stage(out, location, pby)
         src_keys.unpersist()
-
-        self._write_pending(location, staging, affected_files)
-        self._apply_pending(location)
-
-        info = new_info
-        self._write_meta(info, file_stats=stats)
-        self._record_snapshot(info)
-        if merged_schema != existing.schema:
-            self._register(info)
-        else:
-            # The batch's collected partition tuples make the catalog
-            # sync surgical (ADD PARTITION per touched value) instead
-            # of a full layout rescan.
-            self._refresh(info, batch_parts)
-        return info
+        new = TableInfo(database, table, location, merged_schema, keys, pby)
+        return self._commit(
+            existing, meta, new, staging, affected_files, batch_parts
+        )
 
     def delete_insert(
         self,
@@ -1113,9 +1087,7 @@ class TableStore:
         more files) and any range-filtered scan skips whole files
         via parquet min/max — the Delta OPTIMIZE ZORDER idea,
         restricted to lexicographic clustering."""
-        info = self.info(database, table)
-        if info is None:
-            raise KeyError(f"no such table {database}.{table}")
+        info, meta = self._require(database, table)
         if info.bucket_by:
             # Bucket membership is baked into file names; rewriting
             # them would break the bucket→file contract. Bucketed
@@ -1152,21 +1124,7 @@ class TableStore:
                 out = src.repartition(int(n_out))
             out.write.mode("overwrite").parquet(dst)
             small.extend(paths)
-        stats = self._load_file_stats(info.location)
-        if info.primary_keys:
-            removed = {f.rsplit("/", 1)[-1] for f in small}
-            stats = {
-                b: v for b, v in stats.items() if b not in removed
-            } | self._collect_file_stats(
-                self._list_data_files(staging),
-                info.primary_keys[0],
-                info.data_schema,
-            )
-        self._write_pending(info.location, staging, small)
-        self._apply_pending(info.location)
-        self._write_meta(info, file_stats=stats)
-        self._record_snapshot(info)
-        self._refresh(info)
+        self._commit(info, meta, info, staging, small)
         return len(small)
 
     # ------------------------------------------------------------------

@@ -24,6 +24,8 @@ re-enter the plan.
 
 from __future__ import annotations
 
+import warnings
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
@@ -67,13 +69,25 @@ def local_df(
         )
         df = spark.createDataFrame(tbl)
     except (pa.lib.ArrowInvalid, pa.lib.ArrowTypeError, TypeError,
-            ValueError):
-        # Nested-typed columns (StructType/MapType holding Row
-        # objects from a collect()) are not convertible by
-        # ``pa.array(list(col))`` — fall back to the plain Row path
-        # (r16, r15 ADVICE). Slower (pickled-RDD relation, no size
-        # stats) but correct; every current call site is flat/array
-        # typed and stays on the arrow path.
+            ValueError) as exc:
+        # Values ``pa.array(list(col))`` cannot convert (e.g. a nested
+        # struct given as a list) fall back to the plain Row path
+        # (r16, r15 ADVICE): correct, but a pickled-RDD relation with
+        # no size statistics, so joins against it plan blind. Every
+        # current call site stays on the arrow path; say so loudly
+        # when one does not.
+        nested = [
+            f"{f.name} {f.dataType.simpleString()}"
+            for f in schema.fields
+            if not isinstance(f.dataType, T.AtomicType)
+        ]
+        warnings.warn(
+            "local_df: rows not convertible to Arrow "
+            f"({type(exc).__name__}: {exc}); falling back to a "
+            "pickled-Row relation without size statistics; non-atomic "
+            f"column types: {', '.join(nested) or 'none'}",
+            stacklevel=2,
+        )
         df = spark.createDataFrame(rows, schema)
     if num_partitions is not None:
         df = df.coalesce(num_partitions)

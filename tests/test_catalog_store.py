@@ -287,6 +287,63 @@ class TestZoneMaps:
         files = store._list_data_files(info.location)
         assert set(stats) == {f.rsplit("/", 1)[-1] for f in files}
 
+    def test_merge_on_new_lead_key_ignores_old_zone_maps(self, spark, store):
+        """Zone maps hold ranges of the table's lead key. A merge whose
+        keys lead with another column must not prune with them (the
+        stored row would survive next to its replacement), and once
+        the keys change no range of the old column is kept."""
+        def part(lo, hi):
+            return spark.range(lo, hi).select(
+                F.col("id").alias("a"),
+                (F.col("id") + 1000).alias("b"),
+                F.lit("old").alias("v"),
+            ).coalesce(1)
+
+        store.create_or_replace("db", "t", part(0, 10), ["a"])
+        store.append("db", "t", part(100, 110))
+        info = store.info("db", "t")
+        before = {
+            f.rsplit("/", 1)[-1] for f in store._list_data_files(info.location)
+        }
+        # b=1005 lives in the file whose `a` range [0, 9] is disjoint
+        # from the batch's b bounds [1005, 1005].
+        batch = spark.createDataFrame([(500, 1005, "new")], ["a", "b", "v"])
+        store.merge("db", "t", batch, ["b"])
+        t = store.read("db", "t")
+        assert [(r.a, r.v) for r in t.where("b = 1005").collect()] == [
+            (500, "new")
+        ]
+        assert t.count() == 20
+        after = {
+            f.rsplit("/", 1)[-1] for f in store._list_data_files(info.location)
+        }
+        stats = store._load_file_stats(info.location)
+        # Only the merge's own files carry stats, and they are b ranges.
+        assert set(stats) == after - before
+        assert all(1000 <= lo and hi <= 1009 for lo, hi in stats.values())
+
+    def test_append_commits_through_staging(self, spark, store):
+        """append stages its batch and commits it like a merge that
+        deletes nothing: no staging dir or marker is left, old files
+        stay, and the new file gets its zone map."""
+        import os
+
+        info = self._two_range_table(spark, store)
+        before = set(store._list_data_files(info.location))
+        store.append(
+            "db", "t",
+            spark.createDataFrame([(50_000, "x")], ["k", "v"]).coalesce(1),
+        )
+        after = set(store._list_data_files(info.location))
+        assert before < after
+        parent, name = os.path.split(info.location)
+        assert os.listdir(parent) == [name]
+        assert not store._exists(f"{info.location}/_sdls_pending.json")
+        stats = store._load_file_stats(info.location)
+        (new,) = after - before
+        assert stats[new.rsplit("/", 1)[-1]] == [50_000, 50_000]
+        assert store.read("db", "t").count() == 201
+
 
 @pytest.fixture()
 def tt_store(spark, tmp_path):
@@ -368,6 +425,27 @@ class TestTimeTravel:
             "db", "t", spark.createDataFrame([(1, "a")], ["k", "v"]), ["k"]
         )
         assert store.snapshots("db", "t") == []
+
+    def test_snapshots_live_in_table_meta(self, spark, tt_store, store):
+        """Snapshots are written with the table meta, in the same write
+        as the commit; a table without history carries no snapshot
+        key and no separate manifest exists either way."""
+        import os
+
+        for s in (tt_store, store):
+            s.create_or_replace(
+                "db", "t", spark.createDataFrame([(1, "a")], ["k", "v"]), ["k"]
+            )
+            s.append("db", "t", spark.createDataFrame([(2, "b")], ["k", "v"]))
+            s.merge("db", "t", spark.createDataFrame([(1, "A")], ["k", "v"]), ["k"])
+        for s in (tt_store, store):
+            loc = s.info("db", "t").location
+            assert sorted(
+                n for n in os.listdir(loc) if n.startswith("_sdls")
+            ) == ["_sdls_meta.json"]
+        meta = tt_store._read_meta(tt_store.info("db", "t").location)
+        assert [v["version"] for v in meta["snapshots"]] == [1, 2, 3]
+        assert "snapshots" not in store._read_meta(store.info("db", "t").location)
 
 
 class TestCompactSortBy:

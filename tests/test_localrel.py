@@ -81,3 +81,29 @@ def test_local_df_empty(spark):  # noqa: F811
     df = local_df(spark, "a long, b string", [])
     assert df.count() == 0
     assert df.schema.simpleString() == "struct<a:bigint,b:string>"
+
+
+def test_local_df_fallback_warns_and_keeps_rows(spark):  # noqa: F811
+    """A nested struct given as a list is not Arrow-convertible; the
+    plain-Row fallback still returns the right rows but says so, naming
+    the non-atomic column types (the relation loses size statistics)."""
+    schema = T.StructType(
+        [
+            T.StructField("id", T.LongType(), True),
+            T.StructField(
+                "s",
+                T.StructType(
+                    [
+                        T.StructField("x", T.LongType(), True),
+                        T.StructField("y", T.StringType(), True),
+                    ]
+                ),
+                True,
+            ),
+        ]
+    )
+    rows = [(1, [7, "a"]), (2, None)]
+    with pytest.warns(UserWarning, match=r"s struct<x:bigint,y:string>"):
+        df = local_df(spark, schema, rows)
+    got = [(r.id, None if r.s is None else tuple(r.s)) for r in df.collect()]
+    assert got == [(1, (7, "a")), (2, None)]

@@ -143,3 +143,28 @@ def test_parquet_num_rows_multi_file_and_fallback(spark, tmp_path):
     assert entry._parquet_num_rows(single) == 7
     # unreadable layout -> None, no raise
     assert entry._parquet_num_rows(str(tmp_path / "nope")) is None
+
+
+def test_nanocache_copy_follows_source_regenerated_in_place(
+    tmp_path, monkeypatch
+):
+    """`_data_path`'s rewritten copy is keyed on the source's size and
+    mtime: a source regenerated under the same path is re-copied, never
+    served stale from the earlier copy."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    monkeypatch.setattr(entry, "_NANOCACHE", str(tmp_path / "cache"))
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    src = sf / "t.parquet"
+    pq.write_table(pa.table({"id": [1], "v": [10]}), src)
+    first = entry._data_path(str(sf), "t")
+    assert pq.read_table(first).column("v").to_pylist() == [10]
+    # unchanged source: the same copy is served
+    assert entry._data_path(str(sf), "t") == first
+
+    pq.write_table(pa.table({"id": [1, 2, 3], "v": [20, 30, 40]}), src)
+    second = entry._data_path(str(sf), "t")
+    assert second != first
+    assert pq.read_table(second).column("v").to_pylist() == [20, 30, 40]
